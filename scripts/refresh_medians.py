@@ -3,6 +3,8 @@
 Bench audit records (the files carry every raw sample per query).
 Usage: python3 scripts/refresh_medians.py <source-note> <bench.json> [...]
 Median is taken over ALL samples of each query across the given records.
+The file is keyed by (sf, cpus): graft.Bench applies it only to a run on
+the same dataset with the same core count.
 """
 import sys, json, statistics
 
@@ -13,8 +15,12 @@ for r in records:
     for q, ss in r.get("samples", {}).items():
         samples.setdefault(q, []).extend(ss)
 sf = records[0]["sf"].rstrip("/").split("/")[-1]
+cpus = {int(r["cpus"]) for r in records}
+if len(cpus) != 1:
+    sys.exit(f"records mix core counts {sorted(cpus)}; medians are per (sf, cpus)")
 out = {
     "sf": sf,
+    "cpus": cpus.pop(),
     "date": records[0].get("date", "") or __import__("datetime").date.today().isoformat(),
     "source": note,
     "queries": {q: round(statistics.median(ss), 4)

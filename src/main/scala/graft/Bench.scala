@@ -90,12 +90,14 @@ object Bench {
     * (r13: q_token_budget 14.88 s vs 1.34 s committed the same day).
     * Read from `bench_results/committed_medians.json` (override via
     * `SPARK_GRAFT_BENCH_REF`); ignored unless the file's `"sf"` matches
-    * the benched dataset (ScaleBench's 10×/30×/100× runs must never be
-    * judged against sf0.1 medians). Missing/unparseable file = empty
-    * map = the guard is simply off — never an error. */
-  private[graft] def committedMedians(sfDir: String): Map[String, Double] = {
-    val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
-      "bench_results/committed_medians.json")
+    * the benched dataset AND its `"cpus"` matches the session's core
+    * count (ScaleBench's 10×/30×/100× runs must never be judged against
+    * sf0.1 medians, nor a 4-core run against 32-core medians). A file
+    * without `"cpus"` matches no session. Missing/unparseable file =
+    * empty map = the guard is simply off — never an error. */
+  private[graft] def committedMedians(sfDir: String, cpus: String,
+      path: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
+        "bench_results/committed_medians.json")): Map[String, Double] = {
     try {
       val p = java.nio.file.Paths.get(path)
       if (!java.nio.file.Files.exists(p)) Map.empty
@@ -103,7 +105,9 @@ object Bench {
         val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
         val sfOk = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
           .exists(_.group(1) == new java.io.File(sfDir).getName)
-        if (!sfOk) Map.empty
+        val cpusOk = "\"cpus\"\\s*:\\s*([0-9]+)".r.findFirstMatchIn(txt)
+          .exists(_.group(1) == cpus.trim)
+        if (!sfOk || !cpusOk) Map.empty
         else "\"(q_[A-Za-z0-9_]+)\"\\s*:\\s*([0-9][0-9.]*)".r
           .findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
@@ -293,7 +297,7 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries.keys.toSeq
       else SparkEntry.queries.keys.filter(args.contains).toSeq
-    val results = measure(spark, sfDir, selected, committedMedians(sfDir))
+    val results = measure(spark, sfDir, selected, committedMedians(sfDir, cpus))
     val loadEnd = loadAvg()
     val waitField =
       Seq(f""""idle_wait_sec":${idleWait}%.1f""", s""""aqe":$aqe""")

@@ -94,11 +94,8 @@ object Checkpoints {
       // runtime broadcast conversion (connectedComponents' star joins:
       // 4.7 -> 9.2 s when AQE went off — truncated frames advertise the
       // default sizeInBytes, so the STATIC planner can't broadcast
-      // them) pass keepAqe=true. SPARK_GRAFT_LOOP_AQE=on restores AQE
-      // everywhere for A/B.
-      if (!keepAqe && !sys.props.get("spark.graft.loop.aqe")
-            .orElse(sys.env.get("SPARK_GRAFT_LOOP_AQE")).contains("on"))
-        s.conf.set("spark.sql.adaptive.enabled", "false")
+      // them) pass keepAqe=true.
+      if (!keepAqe) s.conf.set("spark.sql.adaptive.enabled", "false")
       s
     }
   }
@@ -110,14 +107,6 @@ object Checkpoints {
     * checkpoints. */
   def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf.get(ReliableConfKey, "false").toBoolean
-
-  /** Session conf key: attach MEASURED statistics (rowCount +
-    * sizeInBytes summed over the materialized UnsafeRows) to truncated
-    * leaves. Default ON — real sizes let the STATIC planner broadcast
-    * small truncated frames (loop label/result frames) without relying
-    * on AQE's runtime rescue. OFF restores the r14 behavior (session
-    * default sizeInBytes) for A/B. */
-  val RealStatsConfKey = "spark.graft.truncate.realStats"
 
   /** Truncate `df`'s lineage eagerly, honoring the session's durability
     * conf. Both paths are eager (the returned frame is materialized), so
@@ -146,8 +135,9 @@ object Checkpoints {
     * compounding above, which came from carrying forward ESTIMATES),
     * and accurate enough that the static planner can broadcast a small
     * truncated frame without AQE's runtime rescue (the r14 verdict's
-    * connectedComponents finding). `spark.graft.truncate.realStats=false`
-    * restores the default-sized leaves for A/B. */
+    * connectedComponents finding). Measured against the r14
+    * default-sized leaves (r15): nothing regressed, and q_hits went
+    * 2.05 → 1.43 s. */
   def truncate(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftext.Bridge
     materialize(df, Bridge.internalRdd(df).map(_.copy()), None)._1
@@ -245,10 +235,7 @@ object Checkpoints {
         rdd.localCheckpoint()
         sizingJob()
       }
-    val realStats =
-      spark.conf.get(RealStatsConfKey, "true").toBoolean
-    val frame = Bridge.truncatedFrame(df, rdd,
-      if (realStats) Some((measured._1, measured._2)) else None)
+    val frame = Bridge.truncatedFrame(df, rdd, (measured._1, measured._2))
     (frame, measured._1, measured._3)
   }
 }

@@ -56,7 +56,7 @@ object CurationPipeline {
     val evalFlag = coalesce(isEval, lit(false))
     val evalSide = df.filter(evalFlag)
     val trainSide = df.filter(!evalFlag)
-    // Eager phases are labeled (guide §1.5) so the UI / StageProbe can
+    // Eager phases are labeled so the UI / tools.Profile can
     // attribute this pipeline's jobs; thread-local, cleared at the end.
     val sc = df.sparkSession.sparkContext
     def labeled[T](desc: String)(body: => T): T = {

@@ -415,6 +415,18 @@ object ScaleQueries extends QueryModule {
     f.delete(); ()
   }
 
+  /** Stream-query state partition count. Swept at sf0.1 over the
+    * 12-query streaming family (two rounds each, idle host):
+    * 1→36.3/—, 2→20.7/—, 4→18.5/25.9, 8→16.3/23.3, 16→43.6,
+    * 32→51.4 s. The cliff above 8 is per-partition state-store
+    * instantiation + task scheduling (every stateful operator
+    * instantiates one store per partition per micro-batch); below 4
+    * the single-task stages serialize real work. 8 won both rounds at
+    * this SF; a production deployment sizes this to its state volume
+    * (state stores scale out with partitions — the 100 TB posture is
+    * MORE partitions, not fewer). */
+  private[queries] val DefaultStatePartitions = 8
+
   /** Stateful streaming operators instantiate one state store per
     * `spark.sql.shuffle.partitions` AT STREAM START (the attribution
     * join: four stores per partition) — with 32 batch-sized partitions
@@ -430,52 +442,14 @@ object ScaleQueries extends QueryModule {
     * session would silently pick up the narrowed width. Safe here
     * because bench/driver runs are strictly sequential; if concurrent
     * driver runs ever appear, scope the conf via a cloned
-    * SparkSession (`s.cloneSession()`) instead. */
-  /** Stream-query state partition count. Swept at sf0.1 over the
-    * 12-query streaming family (two rounds each, idle host):
-    * 1→36.3/—, 2→20.7/—, 4→18.5/25.9, 8→16.3/23.3, 16→43.6,
-    * 32→51.4 s. The cliff above 8 is per-partition state-store
-    * instantiation + task scheduling (every stateful operator
-    * instantiates one store per partition per micro-batch); below 4
-    * the single-task stages serialize real work. 8 won both rounds at
-    * this SF; a production deployment sizes this to its state volume
-    * (state stores scale out with partitions — the 100 TB posture is
-    * MORE partitions, not fewer). */
-  private[queries] val DefaultStatePartitions = 8
-
+    * SparkSession (`s.cloneSession()`) instead. The state-store
+    * provider stays Spark's default: a RocksDB A/B was neutral and did
+    * not bear out the on-heap-state GC hypothesis (r11). */
   private[queries] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    // SPARK_GRAFT_STATE_PARTITIONS overrides every stream's state
-    // partition count for A/B runs (state stores instantiate per
-    // partition per stateful operator — the dominant per-query fixed
-    // tax candidate at bench scale).
-    val eff = sys.env.get("SPARK_GRAFT_STATE_PARTITIONS")
-      .map(_.toInt).getOrElse(n)
-    s.conf.set(key, eff.toString)
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb (or a full provider class
-    // name) swaps the state-store backend for A/B runs. The default
-    // HDFSBackedStateStoreProvider keeps every partition's state map
-    // ON-HEAP and lingers after query termination until the
-    // maintenance unload tick — the candidate cause of q_stream_dedup's
-    // positional warm spikes at 30× (millions of dedup keys per run
-    // GC-churning the driver-executor JVM). RocksDB keeps state
-    // off-heap — also the production posture for large-state streams.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach { p =>
-      s.conf.set(provKey, if (p == "rocksdb")
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      else p)
-    }
-    try body finally {
-      s.conf.set(key, prev)
-      if (sys.env.contains("SPARK_GRAFT_STATE_PROVIDER"))
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-    }
+    s.conf.set(key, n.toString)
+    try body finally s.conf.set(key, prev)
   }
 
   private def qStreamSessionize(s: SparkSession, dir: String): DataFrame = {

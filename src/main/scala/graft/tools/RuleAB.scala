@@ -4,7 +4,7 @@ package graft.tools
   * query, alternate legs with and without the exclusions, 2 samples per
   * leg per round. Usage:
   *   runMain graft.tools.RuleAB <sfDir> <mode> <query ...>
-  * mode: gen | constraints | both
+  * mode: gen | constraints | infercon
   */
 object RuleAB {
   def main(args: Array[String]): Unit = {
@@ -30,22 +30,6 @@ object RuleAB {
         // the test leg additionally excludes InferFiltersFromConstraints
         spark.conf.set("spark.sql.optimizer.excludedRules",
           if (on) s"$genRule,$conRule" else genRule)
-      case "loopaqe" =>
-        // baseline = pre-r14 behavior (AQE stays on inside loop
-        // clones); "excluded" = the r14 default (AQE off in the clone)
-        if (on) sys.props.remove("spark.graft.loop.aqe")
-        else sys.props("spark.graft.loop.aqe") = "on"
-        ()
-      case "realstats" =>
-        // baseline = r14 behavior (truncated leaves carry the default
-        // sizeInBytes); test = r15 measured statistics
-        spark.conf.set(graft.Checkpoints.RealStatsConfKey, on.toString)
-      case "ccaqe" =>
-        // baseline = r14 behavior (connectedComponents keeps AQE in its
-        // loop clone); test = AQE off, static broadcasts from the r15
-        // measured stats carrying the star joins. Both legs keep
-        // realStats at its default (on).
-        spark.conf.set("spark.graft.cc.keepAqe", (!on).toString)
       case other => sys.error(s"unknown mode $other")
     }
     def sample(name: String): Double = {

@@ -44,25 +44,33 @@ class BenchSummarySpec extends AnyFunSuite {
   }
 
   test("committed-medians ref: sf-gated parse, ref_exceeded surfaces in both records") {
-    // parse: the committed file matches only its own sf
+    // parse: the committed file matches only its own (sf, cpus)
     val dir = java.nio.file.Files.createTempDirectory("graft_ref_")
     val f = dir.resolve("ref.json")
     java.nio.file.Files.write(f,
-      """{"sf":"sf0.1","queries":{"q_agg":0.40,"q_token_budget":1.34}}"""
+      """{"sf":"sf0.1","cpus":32,"queries":{"q_agg":0.40,"q_token_budget":1.34}}"""
         .getBytes("UTF-8"))
-    val prev = sys.env.get("SPARK_GRAFT_BENCH_REF")
-    assert(prev.isEmpty, "test assumes SPARK_GRAFT_BENCH_REF unset")
-    // committedMedians reads env; drive the parse through a direct file
-    // read instead by pointing the default path at the temp file via a
-    // process-prop-free check: call with matching vs non-matching sfDir
-    // against the real committed file when present.
+    val ref = f.toString
+    val m = Bench.committedMedians("data/sf0.1", "32", ref)
+    assert(m == Map("q_agg" -> 0.40, "q_token_budget" -> 1.34))
+    assert(Bench.committedMedians("data/x30", "32", ref).isEmpty,
+      "medians must not apply to a different scale's dataset")
+    assert(Bench.committedMedians("data/sf0.1", "4", ref).isEmpty,
+      "32-core medians must not judge a 4-core session")
+    // a file keyed by sf alone judges no session
+    val unkeyed = dir.resolve("unkeyed.json")
+    java.nio.file.Files.write(unkeyed,
+      """{"sf":"sf0.1","queries":{"q_agg":0.40}}""".getBytes("UTF-8"))
+    assert(Bench.committedMedians("data/sf0.1", "4",
+      unkeyed.toString).isEmpty)
+    // the committed file carries the core count it was measured on
     val committed = java.nio.file.Paths.get(
       "bench_results/committed_medians.json")
     if (java.nio.file.Files.exists(committed)) {
-      val m = Bench.committedMedians("/root/testdata/sf0.1")
-      assert(m.nonEmpty && m.contains("q_agg"))
-      assert(Bench.committedMedians("/tmp/x30").isEmpty,
-        "medians must not apply to a different scale's dataset")
+      assert(Bench.committedMedians("data/sf0.1", "32",
+        committed.toString).contains("q_agg"))
+      assert(Bench.committedMedians("data/sf0.1", "4",
+        committed.toString).isEmpty)
     }
     // rendering: a query past the ref bound is carried in ref_exceeded
     val res = mkResults(3) :+ Bench.QRes("q_slow", 9.9, Seq(9.9, 10.1),

@@ -71,30 +71,15 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("c4: all-cut doc keeps its row empty; NULL text stays NULL") {
-    val df = Seq((1L, "no punct at all"), (2L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
+    val df = Seq((1L, "no punct at all"), (2L, null.asInstanceOf[String]),
+      (3L, "")).toDF("doc_id", "text")
     val out = Curation.c4LineClean(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), Option(r.getString(3)))).toMap
     assert(out(1L) == ((1L, 0L, Some(""))))
     assert(out(2L) == ((0L, 0L, None)))
-  }
-
-  test("c4: map-only HOF plan ≡ explode/agg plan (mode equivalence)") {
-    val df = Seq(
-      (1L, "keep this proper line.\nno terminator\nanother good line stays!"),
-      (2L, null.asInstanceOf[String]),
-      (3L, ""),
-      (4L, "every line cut here"),
-      (5L, "accept our cookie policy now.\nbut this line survives fine."))
-      .toDF("doc_id", "text")
-    def run() = Curation.c4LineClean(df, "doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        Option(r.getString(3)))).toSet
-    val hof = run() // default since r13: zero-shuffle HOF plan
-    sys.props("spark.graft.c4.mode") = "agg"
-    try assert(run() == hof)
-    finally sys.props.remove("spark.graft.c4.mode")
+    // empty text is one empty line, cut: row kept, clean text empty
+    assert(out(3L) == ((1L, 0L, Some(""))))
   }
 
   // ---------------------------------------- C80: BPE merge learning

@@ -246,22 +246,32 @@ class OpsSpec extends SparkSpec {
       assert(expect.nonEmpty || p == 100, s"p=$p test has no positive pairs")
     }
     // shingle units (the production mode): same losslessness vs brute
-    // force over bigram sets
-    val sets2 = docs.map { case (i, t) =>
-      val tk = t.split(" ")
-      i -> tk.sliding(2).filter(_.length == 2).map(_.mkString(" ")).toSet
-    }.toMap
-    val got2 = Dedup.similarityJoinExact(df, "doc_id", "text", 50, 2)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)),
-        (r.getLong(2), r.getLong(3)))).toMap
-    val expect2 = (for {
-      a <- sets2.keys; b <- sets2.keys
-      if a < b && sets2(a).nonEmpty && sets2(b).nonEmpty
-      inter = (sets2(a) & sets2(b)).size
-      union = (sets2(a) | sets2(b)).size
-      if 100 * inter >= 50 * union
-    } yield ((a, b), (inter.toLong, union.toLong))).toMap
-    assert(got2 == expect2)
+    // force over bigram sets — on this corpus at p=50, and at p=60 on a
+    // second corpus (80 docs, another stride) that shares fewer bigrams
+    val docsB = (1L to 80L).map { i =>
+      val len = 3 + (i * 7 % 10).toInt
+      (i, (0 until len).map(j => vocab(((i * 29 + j * 11) % 24).toInt))
+        .mkString(" "))
+    }
+    for ((corpus, p) <- Seq((docs, 50), (docsB, 60))) {
+      val sets2 = corpus.map { case (i, t) =>
+        val tk = t.split(" ")
+        i -> tk.sliding(2).filter(_.length == 2).map(_.mkString(" ")).toSet
+      }.toMap
+      val got2 = Dedup.similarityJoinExact(corpus.toDF("doc_id", "text"),
+          "doc_id", "text", p, 2)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)),
+          (r.getLong(2), r.getLong(3)))).toMap
+      val expect2 = (for {
+        a <- sets2.keys; b <- sets2.keys
+        if a < b && sets2(a).nonEmpty && sets2(b).nonEmpty
+        inter = (sets2(a) & sets2(b)).size
+        union = (sets2(a) | sets2(b)).size
+        if 100 * inter >= p * union
+      } yield ((a, b), (inter.toLong, union.toLong))).toMap
+      assert(got2 == expect2, s"shingle=2 p=$p")
+      assert(expect2.nonEmpty, s"shingle=2 p=$p test has no positive pairs")
+    }
 
     // exact duplicates survive at threshold 100 with jaccard 1.0
     val dup = Seq((1L, "alpha beta gamma"), (2L, "alpha beta gamma"),
@@ -315,36 +325,12 @@ class OpsSpec extends SparkSpec {
       s"guard caches accumulated across calls: $after1 -> $after4")
   }
 
-  test("similarityJoinExact verify tails are equivalent (array vs join)") {
-    // r14: the default verify counts |A∩B| per candidate pair with a
-    // codegen'd array_intersect over the attached distinct-unit arrays;
-    // the pre-r14 exploded pair×token join + pair-count aggregate stays
-    // behind spark.graft.simjoin.verify=join. Both must emit identical
-    // rows (n_inter/n_union/jaccard included) on token AND shingle
-    // units — this is the equivalence pin the tail comment cites.
-    val vocab = ('a' to 'x').map(c => s"w$c")
-    val docs = (1L to 80L).map { i =>
-      val len = 3 + (i * 7 % 10).toInt
-      (i, (0 until len).map(j => vocab(((i * 29 + j * 11) % 24).toInt))
-        .mkString(" "))
-    }
-    val df = docs.toDF("doc_id", "text")
-    for ((p, sh) <- Seq((50, 1), (60, 2), (80, 1))) {
-      def rows() = Dedup.similarityJoinExact(df, "doc_id", "text", p, sh)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getDouble(4))).toSet
-      val arrayTail = rows()
-      sys.props(Dedup.VerifyConfKey) = "join"
-      val joinTail = try rows() finally sys.props.remove(Dedup.VerifyConfKey)
-      assert(arrayTail == joinTail, s"p=$p shingle=$sh: verify tails diverge")
-    }
-  }
-
   test("similarityJoinExact eager working set: identical results, bounded cache") {
     // The 30×/100× regime persists the exploded working set instead of
     // re-deriving it in each of its four consumers; results must be
     // bit-identical and the one-slot registry must release the previous
-    // call's cache (same discipline as the guard cache).
+    // call's cache (same discipline as the guard cache). A 1-row
+    // threshold forces the eager regime on this small corpus.
     val vocab = ('a' to 'x').map(c => s"w$c")
     val docs = (1L to 60L).map { i =>
       val len = 3 + (i * 7 % 10).toInt
@@ -355,18 +341,20 @@ class OpsSpec extends SparkSpec {
     val lazyRes = Dedup.similarityJoinExact(df, "doc_id", "text", 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    sys.props("spark.graft.simjoin.eager") = "on"
+    val lazyCached = spark.sparkContext.getPersistentRDDs.size
+    spark.conf.set(Dedup.EagerRowsConfKey, "1")
     try {
       def run() = Dedup.similarityJoinExact(df, "doc_id", "text", 50)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
       assert(run() == lazyRes)
       val after1 = spark.sparkContext.getPersistentRDDs.size
+      assert(after1 > lazyCached, "a 1-row threshold must persist")
       run(); run()
       val after3 = spark.sparkContext.getPersistentRDDs.size
       assert(after3 <= after1,
         s"working-set caches accumulated: $after1 -> $after3")
-    } finally sys.props.remove("spark.graft.simjoin.eager")
+    } finally spark.conf.unset(Dedup.EagerRowsConfKey)
   }
 
   test("simjoin eager threshold: conf override, heap default, uncapped auto-eager") {
@@ -1027,31 +1015,6 @@ class OpsSpec extends SparkSpec {
     // to doc 3 and the NULL-id copy is stripped
     assert(out(None) == "only here")
     assert(out(Some(3L)) == "shared")
-  }
-
-  test("paragraphDedup: sorted streaming reassembly ≡ aggregate reassembly") {
-    import spark.implicits._
-    // multi-partition corpus with duplicated/unique/short lines, NULL
-    // ids and NULL/empty texts — every branch both tails must agree on
-    val docs = (1L to 200L).map { i =>
-      val lines = (0 to (i % 7).toInt).map(j => s"line ${(i + j) % 23} body text")
-      (if (i % 31 == 0) null else java.lang.Long.valueOf(i),
-        if (i % 17 == 0) null
-        else if (i % 13 == 0) ""
-        else lines.mkString("\n"))
-    }
-    val df = docs.toDF("doc_id", "text").repartition(7)
-    def run() = Dedup.paragraphDedup(df, "doc_id", "text").collect()
-      .map(r => (Option(r.get(0)), r.getLong(1), r.getLong(2),
-        Option(r.getString(3)))).toSet
-    val agg = run()
-    sys.props("spark.graft.reassembly") = "sorted"
-    try {
-      val sorted = run()
-      assert(sorted == agg,
-        s"tails disagree: only-agg=${agg.diff(sorted).take(3)} " +
-          s"only-sorted=${sorted.diff(agg).take(3)}")
-    } finally sys.props.remove("spark.graft.reassembly")
   }
 
   // ---------- C106: consensus near-dup (minhash ∩ simhash bands)
