@@ -11,7 +11,7 @@ NEW="${NEW:-target/scala-2.13/classes}"
 ROUNDS="${ROUNDS:-3}"
 OUTDIR="${OUTDIR:-/tmp/r15_ab}"
 SF="${SF:-/root/testdata/sf0.1}"
-CPUS="${CPUS:-32}"
+CPUS="${CPUS:-$(nproc)}"
 mkdir -p "$OUTDIR"
 for r in $(seq 1 "$ROUNDS"); do
   for leg in old new; do

@@ -1,5 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.atomic.AtomicLong
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftext.Bridge
 
 /** Benchmark entrypoint. Prints ONE JSON line the driver records as
   * BENCH_rN.json. Hardened so the record stands on its own:
@@ -11,6 +17,8 @@ import org.apache.spark.sql.SparkSession
   *   - contended samples are re-measured: when the two samples of a
   *     query disagree by >3x, up to two extra samples are taken and the
   *     minimum is kept (host-contention outliers, not engine time);
+  *   - samples time the FULL result ([[runFull]]); each query records
+  *     its spilled bytes and peak task memory (max over its samples);
   *   - the FULL record (including every raw sample) is also written to
   *     a file (`SPARK_GRAFT_BENCH_OUT`, default
   *     `bench_results/latest_<sfbase>.json`) — the driver's captured
@@ -71,17 +79,36 @@ object Bench {
   private def jd(d: Double): String =
     if (d.isNaN || d.isInfinite) "null" else f"$d%.4f"
 
-  /** JSON string escape — exception messages carry newlines/controls
+  private val mapper = new ObjectMapper()
+
+  /** Quoted JSON string — exception messages carry newlines/controls
     * (Spark analysis errors are routinely multi-line) and must not break
     * the one-JSON-line contract. */
-  private def js(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
+  private def js(s: String): String = mapper.writeValueAsString(s)
 
   final case class QRes(name: String, sec: Double, samples: Seq[Double],
       ok: Boolean, err: Option[String], resampled: Boolean,
-      refExceeded: Boolean = false)
+      refExceeded: Boolean = false, memSpilled: Long = 0L,
+      diskSpilled: Long = 0L, peakTaskMem: Long = 0L)
+
+  /** The one timing action of the graft mains: the FULL result into the
+    * `noop` sink. Never `count()`, which prunes the columns it does not
+    * need (q_tokenize_docs: 2.11 s by count vs 3.36 s in full). */
+  def runFull(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Task spill and peak execution memory since the last [[take]]. Read
+    * only after [[Bridge.drainListenerBus]], outside the timed window. */
+  private final class SpillListener extends SparkListener {
+    private val mem, disk, peak = new AtomicLong
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      Option(t.taskMetrics).foreach { m =>
+        mem.addAndGet(m.memoryBytesSpilled)
+        disk.addAndGet(m.diskBytesSpilled)
+        peak.accumulateAndGet(m.peakExecutionMemory, math.max(_, _))
+      }
+    def take(): Seq[Long] = Seq(mem, disk, peak).map(_.getAndSet(0L))
+  }
 
   /** Last COMMITTED per-query medians — the cross-run guard the r13
     * driver record proved the intra-run 3× check cannot provide: when
@@ -98,24 +125,18 @@ object Bench {
   private[graft] def committedMedians(sfDir: String, cpus: String,
       path: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
         "bench_results/committed_medians.json")): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
     try {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val sfOk = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
-          .exists(_.group(1) == new java.io.File(sfDir).getName)
-        val cpusOk = "\"cpus\"\\s*:\\s*([0-9]+)".r.findFirstMatchIn(txt)
-          .exists(_.group(1) == cpus.trim)
-        if (!sfOk || !cpusOk) Map.empty
-        else "\"(q_[A-Za-z0-9_]+)\"\\s*:\\s*([0-9][0-9.]*)".r
-          .findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+      val f = new java.io.File(path)
+      val node = if (f.exists) mapper.readTree(f) else mapper.missingNode()
+      if (node.path("sf").asText != new java.io.File(sfDir).getName ||
+          node.path("cpus").asText != cpus.trim) Map.empty
+      else node.path("queries").properties().asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
   }
 
-  /** Measure the named queries against `sfDir` (two samples, min;
+  /** Measure the given queries against `sfDir` (two samples, min;
     * contended samples re-measured). Shared by [[Bench]] and
     * [[ScaleBench]]. Two re-sample triggers, both bounded at two extra
     * samples: (a) the two samples disagree >3× (one contended sample);
@@ -127,22 +148,30 @@ object Bench {
     * regression stays visible, it just can't masquerade as a clean
     * sample. */
   def measure(spark: SparkSession, sfDir: String,
-      names: Seq[String],
-      ref: Map[String, Double] = Map.empty): Seq[QRes] =
-    names.sorted.map { name =>
-      val fn = SparkEntry.queries(name)
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      ref: Map[String, Double] = Map.empty): Seq[QRes] = {
+    val spill = new SpillListener
+    spark.sparkContext.addSparkListener(spill)
+    try queries.sortBy(_._1).map { case (name, fn) =>
       var err: Option[String] = None
+      var spilled = Seq(0L, 0L, 0L)
       def sample(): Option[Double] = {
+        Bridge.drainListenerBus(spark)
+        spill.take()
         val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            err = Some(e.getClass.getSimpleName +
-              Option(e.getMessage).map(m => ": " + m.take(120)).getOrElse(""))
-            None
-        }
+        val sec =
+          try {
+            runFull(fn(spark, sfDir))
+            Some((System.nanoTime() - t0) / 1e9)
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              err = Some(e.getClass.getSimpleName +
+                Option(e.getMessage).map(m => ": " + m.take(120)).getOrElse(""))
+              None
+          }
+        Bridge.drainListenerBus(spark)
+        spilled = spilled.zip(spill.take()).map { case (a, b) => a max b }
+        sec
       }
       var samples = Seq(sample(), sample()).flatten
       var resampled = false
@@ -160,10 +189,33 @@ object Bench {
       // sample failure (e.g. during a resample) must not report a
       // healthy query as a crash. err survives only with zero samples.
       val ok = samples.nonEmpty
+      val Seq(mem, disk, peak) = spilled
       QRes(name, if (samples.nonEmpty) samples.min else -1.0,
         samples, ok, if (ok) None else err, resampled,
-        refExceeded = refSlow)
-    }
+        refExceeded = refSlow, memSpilled = mem, diskSpilled = disk,
+        peakTaskMem = peak)
+    } finally spark.sparkContext.removeSparkListener(spill)
+  }
+
+  /** `{"<query>":<value>,...}` over `results`. */
+  private def byQuery(results: Seq[QRes])(value: QRes => String): String =
+    results.map(r => js(r.name) + ":" + value(r)).mkString("{", ",", "}")
+
+  private def names(results: Seq[QRes]): String =
+    results.map(r => js(r.name)).mkString("[", ",", "]")
+
+  private def errors(results: Seq[QRes]): String =
+    byQuery(results.filter(_.err.nonEmpty))(r => js(r.err.get))
+
+  private def cpusJson(cpus: String): String =
+    cpus.toIntOption.map(_.toString).getOrElse(js(cpus))
+
+  // An already-busy host inflates every sample (round-6 lesson: load 6
+  // made trivial queries read 5-18x slower); mains now WAIT for an
+  // idle host (awaitIdleHost) and this flag marks the bounded-wait
+  // timeout case — see IdleLoad for the absolute-threshold rationale.
+  private def contended(loadStart: Double): Boolean =
+    !loadStart.isNaN && loadStart > IdleLoad
 
   /** Render results to the one-line JSON record. `extraFields` are
     * appended verbatim (already-rendered `"key":value` fragments). */
@@ -171,38 +223,25 @@ object Bench {
       loadStart: Double, loadEnd: Double,
       extraFields: Seq[String] = Nil,
       withSamples: Boolean = false): String = {
-    val cpusJson = cpus.toIntOption.map(_.toString)
-      .getOrElse("\"" + js(cpus) + "\"")
     val okResults = results.filter(_.ok)
-    val qs = okResults.map(r => "\"" + r.name + "\":" + jd(r.sec))
-      .mkString("{", ",", "}")
-    val oks = results.map(r => "\"" + r.name + "\":" + r.ok)
-      .mkString("{", ",", "}")
-    val errs = results.flatMap(r => r.err.map(e =>
-        "\"" + r.name + "\":\"" + js(e) + "\""))
-      .mkString("{", ",", "}")
-    val resampledNames = results.filter(_.resampled)
-      .map(r => "\"" + r.name + "\"").mkString("[", ",", "]")
-    val refExceededNames = results.filter(_.refExceeded)
-      .map(r => "\"" + r.name + "\"").mkString("[", ",", "]")
-    val total = okResults.map(_.sec).sum
-    val failed = results.count(!_.ok)
+    val spill = byQuery(results)(r =>
+      s"""{"mem_spilled_bytes":${r.memSpilled},""" +
+        s""""disk_spilled_bytes":${r.diskSpilled},""" +
+        s""""peak_task_mem_bytes":${r.peakTaskMem}}""")
     val sampleField =
       if (!withSamples) ""
-      else ",\"samples\":" + results.map(r =>
-        "\"" + r.name + "\":" + r.samples.map(jd).mkString("[", ",", "]"))
-        .mkString("{", ",", "}")
-    // An already-busy host inflates every sample (round-6 lesson: load 6
-    // made trivial queries read 5-18x slower); mains now WAIT for an
-    // idle host (awaitIdleHost) and this flag marks the bounded-wait
-    // timeout case — see IdleLoad for the absolute-threshold rationale.
-    val contended = !loadStart.isNaN && loadStart > IdleLoad
-    (s"""{"metric":"total","value":${jd(total)},"unit":"sec","queries":$qs,""" +
-      s""""sf":"${js(sfDir)}","ok":$oks,"failed":$failed,"errors":$errs,""" +
-      s""""resampled":$resampledNames,"ref_exceeded":$refExceededNames,""" +
+      else ",\"samples\":" +
+        byQuery(results)(_.samples.map(jd).mkString("[", ",", "]"))
+    (s"""{"metric":"total","value":${jd(okResults.map(_.sec).sum)},""" +
+      s""""unit":"sec","queries":${byQuery(okResults)(r => jd(r.sec))},""" +
+      s""""sf":${js(sfDir)},"ok":${byQuery(results)(_.ok.toString)},""" +
+      s""""failed":${results.count(!_.ok)},"errors":${errors(results)},""" +
+      s""""resampled":${names(results.filter(_.resampled))},""" +
+      s""""ref_exceeded":${names(results.filter(_.refExceeded))},""" +
       s""""load_avg_start":${jd(loadStart)},""" +
-      s""""load_avg_end":${jd(loadEnd)},"host_contended":$contended,""" +
-      s""""cpus":$cpusJson""" +
+      s""""load_avg_end":${jd(loadEnd)},""" +
+      s""""host_contended":${contended(loadStart)},""" +
+      s""""cpus":${cpusJson(cpus)},"spill":$spill""" +
       extraFields.map("," + _).mkString + sampleField + "}")
   }
 
@@ -217,24 +256,17 @@ object Bench {
       loadStart: Double, loadEnd: Double,
       extraFields: Seq[String] = Nil,
       detailPath: String = ""): String = {
-    val cpusJson = cpus.toIntOption.map(_.toString)
-      .getOrElse("\"" + js(cpus) + "\"")
     val okResults = results.filter(_.ok)
-    val total = okResults.map(_.sec).sum
-    val failed = results.count(!_.ok)
-    val errs = results.flatMap(r => r.err.map(e =>
-        "\"" + r.name + "\":\"" + js(e) + "\""))
-      .mkString("{", ",", "}")
-    val contended = !loadStart.isNaN && loadStart > IdleLoad
     val fixed =
-      s"""{"metric":"total","value":${jd(total)},"unit":"sec","sf":"${js(sfDir)}",""" +
-      s""""n_queries":${results.size},"failed":$failed,"errors":$errs,""" +
+      s"""{"metric":"total","value":${jd(okResults.map(_.sec).sum)},""" +
+      s""""unit":"sec","sf":${js(sfDir)},"n_queries":${results.size},""" +
+      s""""failed":${results.count(!_.ok)},"errors":${errors(results)},""" +
       s""""resampled_n":${results.count(_.resampled)},""" +
       s""""ref_exceeded_n":${results.count(_.refExceeded)},""" +
       s""""load_avg_start":${jd(loadStart)},"load_avg_end":${jd(loadEnd)},""" +
-      s""""host_contended":$contended,"cpus":$cpusJson""" +
+      s""""host_contended":${contended(loadStart)},"cpus":${cpusJson(cpus)}""" +
       extraFields.map("," + _).mkString +
-      (if (detailPath.isEmpty) "" else s""","detail":"${js(detailPath)}"""")
+      (if (detailPath.isEmpty) "" else s""","detail":${js(detailPath)}""")
     // Slowest-first query entries, added while the line stays inside the
     // driver's capture window (strict budget, counted per entry). The
     // window is 2000 chars of COMBINED stdout+stderr, and streaming
@@ -244,7 +276,7 @@ object Bench {
     // preamble and sbt's `[success]` epilogue.
     val budget = 600 - fixed.length
     val entries = okResults.sortBy(-_.sec)
-      .map(r => "\"" + r.name + "\":" + f"${r.sec}%.2f")
+      .map(r => js(r.name) + ":" + f"${r.sec}%.2f")
     val kept = scala.collection.mutable.ArrayBuffer.empty[String]
     var used = 0
     entries.foreach { e =>
@@ -270,37 +302,27 @@ object Bench {
         System.err.println(s"bench audit write failed for $path: $e")
     }
 
-  def session(cpus: String): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** The queries named in `args`, or every query when none is named. */
+  def selectedQueries(
+      args: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    SparkEntry.queries.filter(e => args.isEmpty || args.contains(e._1)).toSeq
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Tables.cpus
     val idleWait = awaitIdleHost()
-    val spark = session(cpus)
-    val aqe = Tables.applyAdaptivePolicy(spark)
+    val spark = Tables.session()
     val loadStart = loadAvg()
     // JVM/codegen warmup so the first measured query isn't charged for it.
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().count()
+      runFull(spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .groupBy("l_returnflag").count())
     } catch { case scala.util.control.NonFatal(_) => () }
-    // Optional args: query names to bench (default: all).
-    val selected =
-      if (args.isEmpty) SparkEntry.queries.keys.toSeq
-      else SparkEntry.queries.keys.filter(args.contains).toSeq
-    val results = measure(spark, sfDir, selected, committedMedians(sfDir, cpus))
+    val results = measure(spark, sfDir, selectedQueries(args),
+      committedMedians(sfDir, cpus))
     val loadEnd = loadAvg()
-    val waitField =
-      Seq(f""""idle_wait_sec":${idleWait}%.1f""", s""""aqe":$aqe""")
+    val waitField = Seq(f""""idle_wait_sec":${idleWait}%.1f""",
+      s""""aqe":${spark.conf.get("spark.sql.adaptive.enabled")}""")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_results/latest_" + new java.io.File(sfDir).getName + ".json")
     // The full per-query record goes to the files FIRST; stdout carries

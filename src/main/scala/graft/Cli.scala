@@ -39,15 +39,7 @@ object Cli {
     val command = args(1)
     val rest = args.drop(2).toSeq
 
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = Tables.session()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     Tables.registerAll(spark, sfDir)
 
@@ -120,7 +112,7 @@ object Cli {
           toRun.foreach { m =>
             try {
               runner.config(m).validate()
-              runner.render(m, allVars ++ dummyVars(runner, m))
+              runner.render(m, allVars ++ runner.dummyVars(m))
               out(s"DRY RUN $m: ${runner.config(m).materialized} ok")
             } catch { case e: Exception =>
               ok = false; out(s"DRY RUN $m: INVALID ${e.getMessage}")
@@ -223,9 +215,9 @@ object Cli {
               .foreach { m =>
                 if (wh.exists(m)) wh.refreshView(m)
                 else wh.registerView(m,
-                  spark.sql(runner.render(m, dummyVars(runner, m))))
+                  spark.sql(runner.render(m, runner.dummyVars(m))))
               }
-            val df = spark.sql(runner.render(model, dummyVars(runner, model)))
+            val df = spark.sql(runner.render(model, runner.dummyVars(model)))
             Lineage.of(df).foreach { l =>
               val fns = if (l.transformations.isEmpty) ""
                 else l.transformations.toSeq.sorted.mkString(" [", ", ", "]")
@@ -236,7 +228,7 @@ object Cli {
       case "validate" =>
         var ok = true
         runner.configMap.foreach { case (name, c) =>
-          try { c.validate(); runner.render(name, dummyVars(runner, name)) }
+          try { c.validate(); runner.render(name, runner.dummyVars(name)) }
           catch { case e: Exception => ok = false; out(s"INVALID $name: ${e.getMessage}") }
         }
         runner.graph.findCycle().foreach { c =>
@@ -286,13 +278,8 @@ object Cli {
         // their bare relation name; view-materialized models resolve
         // through ref() to their registered temp views.
         runner.graph.models.filter(wh.exists).foreach(wh.refreshView)
-        val rendered = SqlTemplate.render(
-          stmt, "adhoc_sql",
-          resolveRef = m => wh.relation(m),
-          resolveSource = (s, t) => runner.sources.getOrElse((s, t),
-            throw new ConfigError(s"unknown source $s.$t")),
-          isIncremental = false,
-          variables = vars)
+        val rendered =
+          runner.renderTemplate(stmt, "adhoc_sql", vars, incremental = false)
         // Parse/analysis failures surface as the typed SqlError
         // (errors.py SQLParseError), with the statement in context —
         // not a raw AnalysisException stack trace.
@@ -426,10 +413,6 @@ object Cli {
     val tag = flagValue(rest, "--tag")
     (positional(rest), vars, tag)
   }
-
-  private def dummyVars(runner: ModelRunner, name: String): Map[String, String] =
-    SqlTemplate.extractVariables(runner.modelSqlMap(name))
-      .map(_ -> "0").toMap
 
   /** Hot-reload loop — the reference's watcher (src/framework/
     * watcher.py:24-148): poll model files, diff hashes via the Planner,

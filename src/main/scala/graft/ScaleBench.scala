@@ -34,8 +34,14 @@ import org.apache.spark.sql.functions._
   * the driver's sf0.01 oracle gate's job, and the replicated corpus is
   * derived from the driver's own testdata, never hand-synthesized.
   *
-  * Output: the Bench JSON line, plus `"factor"`, written to
-  * `SPARK_GRAFT_SCALE_OUT` (default `bench_results/scale_latest.json`).
+  * Output: the Bench JSON line, plus `"factor"` and the JVM's
+  * `"jvm_max_mem_bytes"`, written to `SPARK_GRAFT_SCALE_OUT` (default
+  * `bench_results/scale_latest.json`). Each query carries its spilled
+  * bytes and peak task memory, so a run under a hard heap cap
+  * (`java -Xmx8g ... graft.ScaleBench` at factor 30) is the
+  * memory-pressure record: nonzero spill with sane wall time shows
+  * graceful degradation, an OOM or a superlinear knee names its
+  * operator.
   */
 object ScaleBench {
 
@@ -121,24 +127,21 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_x${factor}_" + new java.io.File(baseDir).getName)
-    val spark = Bench.session(cpus)
+    val spark = Tables.session()
     buildScaled(spark, baseDir, scaledDir, factor)
-    val selected =
-      if (args.isEmpty) SparkEntry.queries.keys.toSeq
-      else SparkEntry.queries.keys.filter(args.contains).toSeq
     // The scaled-dir build above is our own (attributable) load; wait
     // for the HOST to be idle only after it finishes settling.
     val idleWait = Bench.awaitIdleHost()
-    val aqe = Tables.applyAdaptivePolicy(spark)
     val loadStart = Bench.loadAvg()
-    val results = Bench.measure(spark, scaledDir, selected)
+    val results = Bench.measure(spark, scaledDir, Bench.selectedQueries(args))
     val loadEnd = Bench.loadAvg()
-    val json = Bench.renderJson(results, scaledDir, cpus, loadStart, loadEnd,
-      extraFields = Seq(s""""factor":$factor,"base_sf":"$baseDir"""",
-        f""""idle_wait_sec":${idleWait}%.1f""", s""""aqe":$aqe"""),
+    val json = Bench.renderJson(results, scaledDir, Tables.cpus, loadStart,
+      loadEnd, extraFields = Seq(s""""factor":$factor,"base_sf":"$baseDir"""",
+        f""""idle_wait_sec":${idleWait}%.1f""",
+        s""""aqe":${spark.conf.get("spark.sql.adaptive.enabled")}""",
+        s""""jvm_max_mem_bytes":${Runtime.getRuntime.maxMemory}"""),
       withSamples = true)
     println(json)
     Bench.writeAudit(

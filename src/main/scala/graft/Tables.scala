@@ -113,8 +113,28 @@ object Tables {
     "spark.sql.streaming.checkpointLocation" ->
       Scratch.dir("graft_stream_ck_"))
 
-  /** AQE policy for harness sessions (Bench/Verify/ScaleBench call
-    * this at session setup) — kept as an explicit, recorded
+  /** Core count of every graft main: `SPARK_GRAFT_CPUS`, else this
+    * machine's available processors. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** The one session factory of the graft mains: `local[cpus]` with as
+    * many shuffle partitions, no UI, [[sessionConfigs]] and
+    * [[applyAdaptivePolicy]]. */
+  def session(logLevel: String = "WARN"): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+    sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    applyAdaptivePolicy(spark)
+    spark
+  }
+
+  /** AQE policy for graft sessions ([[session]] and the perfbench
+    * Harness call this at session setup) — kept as an explicit, recorded
     * decision point because it was a live hypothesis: AQE runs every
     * shuffle stage as its OWN job and waits on materialized stats
     * between stages, a fixed scheduling tax that an isolated

@@ -1,6 +1,7 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.DataFrame
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -83,20 +84,36 @@ final class ModelRunner(
     g
   }
 
-  /** Render a model's SQL against the warehouse namespace. With
-    * `fullRefresh`, `is_incremental()` renders false even when the table
-    * exists, so the model selects its full history. */
-  def render(name: String, variables: Map[String, String] = Map.empty,
-      fullRefresh: Boolean = false): String = {
-    val incremental = modelCfg(name).isIncremental && wh.exists(name) && !fullRefresh
+  /** The one template renderer: `sql` rendered for model (or statement)
+    * `name`, refs resolving to warehouse relations and sources through
+    * this runner's source map. */
+  def renderTemplate(sql: String, name: String,
+      variables: Map[String, String], incremental: Boolean): String =
     SqlTemplate.render(
-      modelSql(name), name,
+      sql, name,
       resolveRef = m => wh.relation(m),
       resolveSource = (s, t) => sources.getOrElse((s, t),
         throw new ConfigError(s"unknown source $s.$t", Map("model" -> name))),
       isIncremental = incremental,
       variables = variables)
-  }
+
+  /** `0` for every variable the model uses: enough to render it for
+    * validation, dry runs and lineage analysis. */
+  def dummyVars(name: String): Map[String, String] =
+    SqlTemplate.extractVariables(modelSql(name)).map(_ -> "0").toMap
+
+  /** `is_incremental()` for `name`: an incremental model whose table
+    * exists, unless `fullRefresh` asks for its full history. */
+  private def incremental(name: String, fullRefresh: Boolean): Boolean =
+    modelCfg(name).isIncremental && wh.exists(name) && !fullRefresh
+
+  /** Render a model's SQL against the warehouse namespace. With
+    * `fullRefresh`, `is_incremental()` renders false even when the table
+    * exists, so the model selects its full history. */
+  def render(name: String, variables: Map[String, String] = Map.empty,
+      fullRefresh: Boolean = false): String =
+    renderTemplate(modelSql(name), name, variables,
+      incremental(name, fullRefresh))
 
   /** Render one hook statement against the same template surface as the
     * model body ({{ this }} resolves to the model's own relation) and
@@ -106,19 +123,9 @@ final class ModelRunner(
     * hooks statement-shaped. */
   private def runHook(
       name: String, hookSql: String, variables: Map[String, String],
-      fullRefresh: Boolean): Unit = {
-    val incremental =
-      modelCfg(name).isIncremental && wh.exists(name) && !fullRefresh
-    val rendered = SqlTemplate.render(
-      hookSql, name,
-      resolveRef = m => wh.relation(m),
-      resolveSource = (s, t) => sources.getOrElse((s, t),
-        throw new ConfigError(s"unknown source $s.$t in hook",
-          Map("model" -> name))),
-      isIncremental = incremental,
-      variables = variables)
-    wh.spark.sql(rendered).collect()
-  }
+      fullRefresh: Boolean): Unit =
+    wh.spark.sql(renderTemplate(hookSql, name, variables,
+      incremental(name, fullRefresh))).collect()
 
   def executeModel(
       name: String,
@@ -148,17 +155,21 @@ final class ModelRunner(
     // readable), BEFORE declared tests — a failing test must not skip
     // the audit/grant trail of a materialization that DID happen.
     cfg.postHooks.foreach(h => runHook(name, h, variables, fullRefresh))
-    // Declarative post-materialization tests (reference testing.py:134
-    // run_model_tests): error-severity failures fail the model — state
-    // records the failure and run() blocks dependents — warn only reports.
+    testAndRecord(name, result)
+  }
+
+  /** The tail of every materialization: declared tests (reference
+    * testing.py:134), where error severity fails the model and warn only
+    * reports, then the execution and change-detection hashes in state. */
+  private def testAndRecord(
+      name: String, result: MaterializeResult): MaterializeResult = {
     val outcomes = runModelTests(name)
     val hard = outcomes.filter(o => !o.passed && o.severity == "error")
-    // run()'s failure path records the failed execution in state
     if (hard.nonEmpty) throw new ModelRunner.ModelTestFailure(name, hard)
     val now = java.time.Instant.now().toString
     wh.state.markExecution(name, success = true, now)
-    wh.state.setHashes(name,
-      StateStore.sha256(modelSql(name)), StateStore.sha256(cfg.toString))
+    wh.state.setHashes(name, StateStore.sha256(modelSql(name)),
+      StateStore.sha256(modelCfg(name).toString))
     val warned = outcomes.count(o => !o.passed)
     if (warned == 0) result
     else result.copy(status = s"${result.status} ($warned test warnings)")
@@ -172,13 +183,7 @@ final class ModelRunner(
     * created the table, so it must keep the serial chunk loop. */
   def incrementalInvariant(
       name: String, variables: Map[String, String] = Map.empty): Boolean = {
-    def r(inc: Boolean) = SqlTemplate.render(
-      modelSql(name), name,
-      resolveRef = m => wh.relation(m),
-      resolveSource = (s, t) => sources.getOrElse((s, t),
-        throw new ConfigError(s"unknown source $s.$t", Map("model" -> name))),
-      isIncremental = inc,
-      variables = variables)
+    def r(inc: Boolean) = renderTemplate(modelSql(name), name, variables, inc)
     r(true) == r(false)
   }
 
@@ -204,17 +209,7 @@ final class ModelRunner(
       .map(v => wh.spark.sql(render(name, v, fullRefresh)))
       .reduce(_.unionByName(_))
     cfg.enforceContract(df.schema)
-    val result = mat.materialize(cfg, df, batchTs, fullRefresh)
-    val outcomes = runModelTests(name)
-    val hard = outcomes.filter(o => !o.passed && o.severity == "error")
-    if (hard.nonEmpty) throw new ModelRunner.ModelTestFailure(name, hard)
-    val now = java.time.Instant.now().toString
-    wh.state.markExecution(name, success = true, now)
-    wh.state.setHashes(name,
-      StateStore.sha256(modelSql(name)), StateStore.sha256(cfg.toString))
-    val warned = outcomes.count(o => !o.passed)
-    if (warned == 0) result
-    else result.copy(status = s"${result.status} ($warned test warnings)")
+    testAndRecord(name, mat.materialize(cfg, df, batchTs, fullRefresh))
   }
 
   /** Run a model's declared `-- test:` suite against its materialized
@@ -242,7 +237,6 @@ final class ModelRunner(
       .flatMap(runModelTests)
   }
 
-  /** Run models (targets + transitive deps, or all) level-by-level. */
   /** Run models level-by-level. With `continueOnError` (the reference's
     * graceful-degradation posture — its executor logs failures and keeps
     * going, executor.py:153-190), a failed model is recorded in state as
@@ -392,18 +386,14 @@ final class ModelRunner(
   // not assumed thread-safe, so line emission is serialized here.
   private val logLock = new Object
 
-  private def logEvent(fields: (String, String)*): Unit =
+  /** One event line, each value typed by its Scala type: strings stay
+    * strings (a model named `2024` logs as `"2024"`), numbers and
+    * booleans ride bare. */
+  private def logEvent(fields: (String, Any)*): Unit =
     logSink.foreach { sink =>
-      def esc(s: String) = s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
-      val quoted = fields.map { case (k, v) =>
-        val vv = // numbers/booleans ride unquoted, everything else quoted
-          if (v.matches("-?\\d+|true|false")) v else "\"" + esc(v) + "\""
-        "\"" + esc(k) + "\":" + vv
-      }
-      val line = quoted.mkString("{", ",", "}")
+      val node = ModelRunner.mapper.createObjectNode()
+      fields.foreach { case (k, v) => node.putPOJO(k, v) }
+      val line = ModelRunner.mapper.writeValueAsString(node)
       logLock.synchronized { sink(line) }
     }
 
@@ -421,15 +411,14 @@ final class ModelRunner(
     def record(status: String): Unit = runMetrics.add(
       ModelRunner.ModelMetric(name, status, elapsedMs, attempt + 1))
     logEvent("event" -> "execution_start", "model" -> name,
-      "attempt" -> "1", "full_refresh" -> fullRefresh.toString)
+      "attempt" -> 1, "full_refresh" -> fullRefresh)
     while (true) {
       try {
         val r = executeModel(name, variables, batchTs, fullRefresh)
         record(r.status)
         logEvent("event" -> "execution_end", "model" -> name,
-          "success" -> "true", "status" -> r.status,
-          "duration_ms" -> elapsedMs.toString,
-          "attempts" -> (attempt + 1).toString)
+          "success" -> true, "status" -> r.status,
+          "duration_ms" -> elapsedMs, "attempts" -> (attempt + 1))
         return r
       }
       catch {
@@ -447,14 +436,14 @@ final class ModelRunner(
           Thread.sleep(retryDelayMs * (1L << attempt))
           attempt += 1
           logEvent("event" -> "execution_retry", "model" -> name,
-            "attempt" -> (attempt + 1).toString,
+            "attempt" -> (attempt + 1),
             "error" -> String.valueOf(e.getMessage))
         case e: Throwable =>
           record(s"failed: ${e.getMessage}")
           logEvent("event" -> "execution_error", "model" -> name,
             "error_class" -> GraftError.classify(e, name).errorClass,
             "error" -> String.valueOf(e.getMessage),
-            "duration_ms" -> elapsedMs.toString)
+            "duration_ms" -> elapsedMs)
           throw e
       }
     }
@@ -487,20 +476,22 @@ final class ModelRunner(
 
   /** JSON export (executor.py:450 export_metrics_json). */
   def metricsJson: String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
     val ms = metrics
-    val models = ms.map { m =>
-      s""""${esc(m.model)}":{"status":"${esc(m.status)}","duration_ms":${m.durationMs},"attempts":${m.attempts}}"""
-    }.mkString(",")
-    s"""{"models":{$models},"total_duration_ms":${ms.map(_.durationMs).sum},""" +
-      s""""succeeded":${ms.count(!_.failed)},"failed":${ms.count(_.failed)}}"""
+    val root = ModelRunner.mapper.createObjectNode()
+    val models = root.putObject("models")
+    ms.foreach { m =>
+      models.putObject(m.model).put("status", m.status)
+        .put("duration_ms", m.durationMs).put("attempts", m.attempts)
+    }
+    root.put("total_duration_ms", ms.map(_.durationMs).sum)
+      .put("succeeded", ms.count(!_.failed)).put("failed", ms.count(_.failed))
+    ModelRunner.mapper.writeValueAsString(root)
   }
 }
 
 object ModelRunner {
+  // Shared by every runner: the perfbench Harness builds one per iteration.
+  private val mapper = new ObjectMapper()
 
   /** One model execution's metrics (executor.py ExecutionMetrics). */
   final case class ModelMetric(

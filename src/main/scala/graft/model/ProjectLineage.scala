@@ -1,6 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 
 /** Cross-model column lineage — the Spark re-expression of the
   * reference's LineageTracker (src/utils/lineage.py:84-160) and
@@ -21,9 +22,6 @@ final class ProjectLineage(
     wh: Warehouse,
     runner: ModelRunner) {
 
-  private def dummyVars(name: String): Map[String, String] =
-    SqlTemplate.extractVariables(runner.modelSqlMap(name)).map(_ -> "0").toMap
-
   /** Lowercased relation name → model name, the boundary set for
     * [[Lineage.ofModel]]. */
   private val relationOf: Map[String, String] =
@@ -37,7 +35,7 @@ final class ProjectLineage(
     runner.graph.executionOrder(None).flatten
       .filter(runner.modelSqlMap.contains)
       .map { m =>
-        val df = spark.sql(runner.render(m, dummyVars(m)))
+        val df = spark.sql(runner.render(m, runner.dummyVars(m)))
         val lin = Lineage.ofModel(df, relationOf)
         if (wh.exists(m)) wh.refreshView(m) else wh.registerView(m, df)
         m -> lin
@@ -68,19 +66,22 @@ final class ProjectLineage(
   /** JSON export of the whole column graph
     * (lineage.py:160-180 export_lineage). */
   def toJson: String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
+    import scala.jdk.CollectionConverters._
+    val root = ProjectLineage.mapper.createObjectNode()
+    val graph = runner.graph
+    perModel.toSeq.sortBy(_._1).foreach { case (m, cols) =>
+      root.putObject(m)
+        .putPOJO("columns", cols.map(cl => ListMap(
+          "column" -> cl.column,
+          "sources" -> cl.sources.toSeq.sorted.asJava,
+          "transformations" -> cl.transformations.toSeq.sorted.asJava)
+          .asJava).asJava)
+        .putPOJO("dependencies", graph.dependencies(m).toSeq.sorted.asJava)
     }
-    val models = perModel.toSeq.sortBy(_._1).map { case (m, cols) =>
-      val colJson = cols.map { cl =>
-        s"""{"column":"${esc(cl.column)}","sources":[${
-          cl.sources.toSeq.sorted.map(s => s""""${esc(s)}"""").mkString(",")}],"transformations":[${
-          cl.transformations.toSeq.sorted.map(t => s""""${esc(t)}"""").mkString(",")}]}"""
-      }.mkString(",")
-      s""""${esc(m)}":{"columns":[$colJson],"dependencies":[${
-        runner.graph.dependencies(m).toSeq.sorted.map(d => s""""${esc(d)}"""").mkString(",")}]}"""
-    }.mkString(",")
-    s"{$models}"
+    ProjectLineage.mapper.writeValueAsString(root)
   }
+}
+
+object ProjectLineage {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 }

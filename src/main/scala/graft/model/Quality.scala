@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * polars_utils.py:96-170: unique / not_null / accepted_values / range).
   *
   * Unlike the reference, which issues one warehouse query per test,
-  * every check except `unique` compiles into a single aggregate pass
-  * over the table (conditional counts), and all `unique` checks share
-  * one aggregation — at 100 TB the difference between N scans and ~1.
+  * every not_null / accepted_values / range check compiles into a
+  * single aggregate pass over the table (conditional counts). Each
+  * `unique` check is one more aggregation (count vs count-distinct of
+  * its column) and each `relationships` check one anti-join count.
   */
 object Quality {
 
@@ -71,8 +72,7 @@ object Quality {
         }
       }
 
-    // duplicate count = total - distinct, per checked column; computed in
-    // one pass over the grouped keys when several unique checks exist.
+    // duplicate count = total - distinct: one aggregation per unique check
     val uniqueResults = uniqueChecks.map { c =>
       val counts = df.agg(
         count(col(c.column)).as("n"),

@@ -354,19 +354,20 @@ object Warehouse {
     * size estimate (proportional to input bytes — exactness does not
     * matter, tracking data volume does).
     *
-    * Frames without real statistics — anything downstream of
-    * [[graft.Checkpoints.truncate]], whose leaf deliberately carries
-    * the session's `defaultSizeInBytes` sentinel (Long.MaxValue by
-    * default in Spark 4.x) — would divide the sentinel by the target
-    * and hit the 2^20 cap: a million-file write. Detect the sentinel
-    * (estimate at or above `defaultSizeInBytes`) and fall back to a
-    * row-count × schema-width estimate instead. For a TRUNCATED frame
-    * (every analyzed-plan leaf a LogicalRDD) that count is a cheap
-    * block scan. Any OTHER saturated-stats frame — e.g. a deep join
-    * plan whose compounded BigInt stats overflow the sentinel — would
-    * execute its full plan once for the count and again for the write,
-    * so [[Warehouse.withResolvedNumFiles]] persists it first and the
-    * write reuses the materialization. */
+    * Frames with saturated statistics — e.g. a deep join plan whose
+    * compounded BigInt stats reach the session's `defaultSizeInBytes`
+    * sentinel (Long.MaxValue by default in Spark 4.x), or an RDD-backed
+    * frame without measured stats — would divide the sentinel by the
+    * target and hit the 2^20 cap: a million-file write. Detect the
+    * sentinel (estimate at or above `defaultSizeInBytes`) and fall back
+    * to a row-count × schema-width estimate instead.
+    * [[graft.Checkpoints.truncate]] leaves carry measured stats, so
+    * truncated frames normally size from their estimate; when one does
+    * saturate, its count (every analyzed-plan leaf a LogicalRDD) is a
+    * cheap block scan. Any other saturated-stats frame would execute
+    * its full plan once for the count and again for the write, so
+    * [[Warehouse.withResolvedNumFiles]] persists it first and the write
+    * reuses the materialization. */
   private[model] def resolveNumFiles(
       df: DataFrame, numFiles: Int, targetFileBytes: Long): Int = {
     if (numFiles > 0) numFiles

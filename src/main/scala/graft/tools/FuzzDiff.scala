@@ -1,7 +1,10 @@
 package graft.tools
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Fuzz differential vs the DuckDB oracle: generate N seeded-random
   * query shapes (filter/project, aggregate, HAVING, joins, windows,
@@ -82,6 +85,7 @@ object FuzzDiff {
 
   /** Bumped whenever the shape grammar changes (see Scaladoc). */
   private val GenVersion = 5
+  private val mapper = new ObjectMapper()
 
   private final case class Col(name: String, t: Char) // i/d/s/t
   private final case class Tbl(name: String, keys: Seq[String], cols: Seq[Col]) {
@@ -771,15 +775,7 @@ object FuzzDiff {
     val outDir = args.lift(1).getOrElse("/tmp/fuzz_out")
     val n = args.lift(2).map(_.toInt).getOrElse(200)
     val seed = args.lift(3).map(_.toLong).getOrElse(11L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session()
     graft.Tables.registerAll(spark, sfDir)
     new java.io.File(outDir).mkdirs()
 
@@ -797,26 +793,25 @@ object FuzzDiff {
         System.err.println(s"[fuzz] $name SPARK-SIDE FAILURE: $sql")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val failed = failures.result()
-    val okSqls = sqls.filterNot(s => failed.exists(_._1 == s._1))
+    val oracle = mapper.createObjectNode()
+    sqls.filterNot(s => failed.exists(_._1 == s._1))
+      .foreach { case (name, _, sql) => oracle.put(name, sql) }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      okSqls.map { case (name, _, sql) => s"${q(name)}: ${q(sql)}" }
-        .mkString("{", ",", "}"))
+      mapper.writeValueAsString(oracle))
     val streamRounds = args.lift(4).map(_.toInt).getOrElse(9)
     val streamDiv =
       if (streamRounds > 0) streamEquivalence(spark, sfDir, g, streamRounds)
       else Nil
     streamDiv.foreach(d => System.err.println(s"[fuzz] STREAM DIVERGENCE: $d"))
-    println(s"""{"gen":$GenVersion,"seed":$seed,"n":$n,"sf":"$sfDir","spark_failures":${failed.size},""" +
-      s""""kinds":{${kindCounts.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString(",")}},""" +
-      s""""stream_rounds":$streamRounds,"stream_divergences":${streamDiv.size},""" +
-      s""""stream_diffs":[${streamDiv.map(q).mkString(",")}],""" +
-      s""""failed":[${failed.map(f => q(f._1) + ":" + q(f._2)).mkString(",")}]}""")
+    println(mapper.writeValueAsString(mapper.createObjectNode()
+      .put("gen", GenVersion).put("seed", seed).put("n", n).put("sf", sfDir)
+      .put("spark_failures", failed.size)
+      .putPOJO("kinds", new java.util.TreeMap(kindCounts.asJava))
+      .put("stream_rounds", streamRounds)
+      .put("stream_divergences", streamDiv.size)
+      .putPOJO("stream_diffs", streamDiv.asJava)
+      .putPOJO("failed", ListMap(failed: _*).asJava)))
     spark.stop()
     if (failed.nonEmpty || streamDiv.nonEmpty) sys.exit(1)
   }

@@ -16,9 +16,7 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.Tables.applyAdaptivePolicy(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.session("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

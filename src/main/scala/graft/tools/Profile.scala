@@ -13,9 +13,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** Per-query layer profile — the one dev entry point for "where does
   * this query's warm time go". For each named query: one warm-up
   * evaluation, then `samples` measured ones (default 3), each a fresh
-  * build plus the FULL result written to the `noop` sink. Never
-  * `count()`: its column pruning skips work the real result pays
-  * (q_tokenize_docs: 2.11 s by count vs 3.36 s in full).
+  * build plus the full result ([[graft.Bench.runFull]]).
   *
   * Prints, per query:
   *   - every sample, split into build (the query function — plan
@@ -95,9 +93,7 @@ object Profile {
     }
     require(names.nonEmpty && samples >= 1,
       "usage: Profile <sfDir> <query ...> [samples]")
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    graft.Tables.applyAdaptivePolicy(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.session("ERROR")
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
     spark.listenerManager.register(rec)
@@ -114,7 +110,7 @@ object Profile {
         Bridge.drainListenerBus(spark)
         val (bJobs, bTasks, bStages) = (rec.jobs, rec.tasks, rec.stages.size)
         val t1 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
+        graft.Bench.runFull(df)
         val write = sec(t1)
         Bridge.drainListenerBus(spark)
         val ph = rec.lastQe.map(_.tracker.phases).getOrElse(Map.empty)

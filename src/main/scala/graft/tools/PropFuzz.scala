@@ -1,6 +1,9 @@
 package graft.tools
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** Operator-PROPERTY fuzzing — [[FuzzDiff]]'s gen 5. The SQL grammar
@@ -46,6 +49,7 @@ import org.apache.spark.sql.functions._
   * "violations":N,…}; exits 1 on any violation.
   */
 object PropFuzz {
+  private val mapper = new ObjectMapper()
 
   /** Deterministic random corpus: duplicate-heavy small-vocabulary
     * text (so LSH/shingle ops produce real candidate structure), 3–6
@@ -235,15 +239,7 @@ object PropFuzz {
   def main(args: Array[String]): Unit = {
     val rounds = args.headOption.map(_.toInt).getOrElse(200)
     val seed = args.lift(1).map(_.toLong).getOrElse(11L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.session("ERROR")
     val props: Seq[(String, (java.util.Random, DataFrame,
         String => Unit) => Unit)] = Seq(
       "capped_subset" -> cappedSubset,
@@ -271,16 +267,12 @@ object PropFuzz {
           System.err.println(s"[propfuzz] CRASH round=$i $name: $e")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val vs = violations.result()
-    println(s"""{"gen":5,"mode":"property","seed":$seed,"rounds":$rounds,""" +
-      s""""properties":{${props.map(p => s""""${p._1}":${perProp(p._1)}""")
-        .mkString(",")}},""" +
-      s""""violations":${vs.size},"details":[${vs.take(20).map(q)
-        .mkString(",")}]}""")
+    println(mapper.writeValueAsString(mapper.createObjectNode()
+      .put("gen", 5).put("mode", "property").put("seed", seed)
+      .put("rounds", rounds)
+      .putPOJO("properties", ListMap(props.map(p => p._1 -> perProp(p._1)): _*).asJava)
+      .put("violations", vs.size).putPOJO("details", vs.take(20).asJava)))
     spark.stop()
     if (vs.nonEmpty) sys.exit(1)
   }

@@ -2,7 +2,8 @@ package graft.tools
 
 /** Same-session A/B of optimizer-rule exclusions (r14): for each named
   * query, alternate legs with and without the exclusions, 2 samples per
-  * leg per round. Usage:
+  * leg per round, each timing the full result ([[graft.Bench.runFull]]).
+  * Usage:
   *   runMain graft.tools.RuleAB <sfDir> <mode> <query ...>
   * mode: gen | constraints | infercon
   */
@@ -11,9 +12,7 @@ object RuleAB {
     val dir = args(0)
     val mode = args(1)
     val names = args.drop(2).toSeq
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.Tables.applyAdaptivePolicy(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.session("ERROR")
     val genRule =
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     val conRule =
@@ -34,7 +33,7 @@ object RuleAB {
     }
     def sample(name: String): Double = {
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir).count()
+      graft.Bench.runFull(graft.SparkEntry.queries(name)(spark, dir))
       (System.nanoTime() - t0) / 1e9
     }
     names.foreach { name =>

@@ -17,9 +17,7 @@ object StreamProbe {
     val dir = args(0)
     val runs = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.Tables.applyAdaptivePolicy(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.session("ERROR")
 
     val progress = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.streams.addListener(new StreamingQueryListener {
@@ -52,7 +50,7 @@ object StreamProbe {
       (1 to runs).foreach { r =>
         progress.clear()
         val t0 = System.nanoTime()
-        fn(spark, dir).count()
+        graft.Bench.runFull(fn(spark, dir))
         val sec = (System.nanoTime() - t0) / 1e9
         // listener is async; give it a beat
         Thread.sleep(300)

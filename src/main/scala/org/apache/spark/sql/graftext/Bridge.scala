@@ -34,8 +34,8 @@ object Bridge {
 
   /** Block until every queued listener event has been delivered
     * (`listenerBus.waitUntilEmpty` is private[spark]). Metrics harnesses
-    * (tools.SpillBench) snapshot listener-accumulated task metrics
-    * around each query; without the drain the async bus would attribute
+    * (`graft.Bench.measure`, `tools.Profile`) snapshot listener-accumulated
+    * task metrics around each query; without the drain the async bus would attribute
     * a query's tail tasks to the next query. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()

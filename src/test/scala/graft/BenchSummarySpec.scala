@@ -1,13 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, udf}
 
 /** The stdout contract of graft.Bench: the driver captures only the
   * LAST ~2000 chars of stdout, so the printed record must (a) fit that
   * window at the full 171-query set and (b) stay valid JSON — round
   * 10's driver record truncated mid-line (`"parsed": null`). The full
   * per-query map lives in the audit file, which renderJson covers. */
-class BenchSummarySpec extends AnyFunSuite {
+class BenchSummarySpec extends SparkSpec {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -91,5 +92,27 @@ class BenchSummarySpec extends AnyFunSuite {
     assert(node.get("errors").get("q_boom").asText.contains("boom"))
     assert(!node.get("queries").has("q_boom"),
       "a crashed query must not appear with a bogus time")
+  }
+
+  test("measure times the full result: a failing unused-by-count column fails") {
+    // count() would prune `bad` and report ok; the noop write computes it
+    val boom = udf((x: Long) => {
+      if (x >= 0) throw new IllegalStateException("udf boom"); x
+    })
+    val q = (s: SparkSession, _: String) =>
+      s.range(3).withColumn("bad", boom(col("id")))
+    val Seq(r) = Bench.measure(spark, sfDir, Seq("q_udf_throws" -> q))
+    assert(!r.ok && r.samples.isEmpty)
+    assert(r.err.exists(_.contains("Exception")), r.err)
+    // a healthy query reports its time and the spill/peak-memory fields
+    val ok = (s: SparkSession, _: String) =>
+      s.range(1000).groupBy(col("id") % 7).count()
+    val Seq(good) = Bench.measure(spark, sfDir, Seq("q_ok" -> ok))
+    assert(good.ok && good.samples.size >= 2)
+    assert(good.peakTaskMem > 0 && good.memSpilled >= 0 && good.diskSpilled >= 0)
+    val spill = mapper.readTree(Bench.renderJson(Seq(good), "sf", "4", 0.5, 0.5))
+      .get("spill").get("q_ok")
+    assert(spill.get("peak_task_mem_bytes").asLong == good.peakTaskMem)
+    assert(spill.has("mem_spilled_bytes") && spill.has("disk_spilled_bytes"))
   }
 }

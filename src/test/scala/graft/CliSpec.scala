@@ -372,6 +372,21 @@ class CliSpec extends SparkSpec {
     assert(endIdx("base") < startIdx("mid") && endIdx("mid") < startIdx("top"))
   }
 
+  test("run --log-json types each field: a numeric model name stays a string") {
+    Tables.registerAll(spark, sfDir)
+    val proj = project("2024" -> "-- config: materialized=table\nSELECT 1 AS x")
+    val (code, lines) = run(proj, "run", "--log-json")
+    assert(code == 0)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val end = lines.filter(_.startsWith("{\"event\":")).map(mapper.readTree)
+      .find(_.get("event").asText == "execution_end")
+      .getOrElse(fail(s"no execution_end event: $lines"))
+    assert(lines.exists(_.contains("\"model\":\"2024\"")), lines)
+    assert(end.get("model").isTextual && end.get("status").isTextual)
+    assert(end.get("success").isBoolean && end.get("success").asBoolean)
+    assert(end.get("duration_ms").isNumber && end.get("attempts").asInt == 1)
+  }
+
   test("deps default format prints stats and per-model dependencies") {
     Tables.registerAll(spark, sfDir)
     val proj = project(

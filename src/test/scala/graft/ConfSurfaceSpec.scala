@@ -26,10 +26,9 @@ class ConfSurfaceSpec extends AnyFunSuite {
     "SPARK_GRAFT_BENCH_MAX_WAIT_SEC" -> "Bench's idle-host wait bound",
     "SPARK_GRAFT_BENCH_OUT" -> "Bench's full-record output path",
     "SPARK_GRAFT_BENCH_REF" -> "Bench's committed-medians file path",
-    "SPARK_GRAFT_SCALE_FACTOR" -> "ScaleBench/SpillBench replication factor",
-    "SPARK_GRAFT_SCALE_DIR" -> "ScaleBench/SpillBench replica directory",
+    "SPARK_GRAFT_SCALE_FACTOR" -> "ScaleBench's replication factor",
+    "SPARK_GRAFT_SCALE_DIR" -> "ScaleBench's replica directory",
     "SPARK_GRAFT_SCALE_OUT" -> "ScaleBench's record output path",
-    "SPARK_GRAFT_SPILL_OUT" -> "SpillBench's record output path",
     "SPARK_GRAFT_STREAM_SINK" ->
       "streaming queries' sink: memory (default) or file (production shape)")
 
